@@ -43,7 +43,6 @@ def main() -> None:
 
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     from tax_compliance_engine_spark.session import get_spark
-    from tax_compliance_engine_spark import dims as dims_mod
 
     spark = get_spark(app_name="qtool")
     if runs:
@@ -56,8 +55,6 @@ def main() -> None:
                 "noop"
             ).mode("overwrite").save()
         spark.catalog.clearCache()
-        dims_mod._DIMS_CACHE.clear()
-        dims_mod.load_dims(spark)
     for name in names:
         fn = resolve(name)
         if out_dir is not None:
@@ -79,8 +76,6 @@ def main() -> None:
                 walls.append(round(time.perf_counter() - t0, 3))
             print(f"time {name}: min={min(walls)} runs={walls}", flush=True)
             spark.catalog.clearCache()
-            dims_mod._DIMS_CACHE.clear()
-            dims_mod.load_dims(spark)
     spark.stop()
 
 

@@ -29,6 +29,7 @@ from .operators import calendar as cal
 from .operators import nexus, refund, tax
 from .schemas import TXN_SCHEMA
 from .session import get_spark
+from .sources.local import local_frame
 from .sources.transactions import scan_transactions_csv
 
 
@@ -127,7 +128,7 @@ def cmd_calculate(args: argparse.Namespace) -> None:
         customer_type="retail",
         pricing_model="exclusive",
     )
-    df = tax.normalize_transactions(spark.createDataFrame([txn], TXN_SCHEMA))
+    df = tax.normalize_transactions(local_frame(spark, [txn], TXN_SCHEMA))
     r = tax.calculate_tax(df, dims).collect()[0]
     total_with_tax = r.taxable_amount + r.tax_amount
     print(

@@ -5,7 +5,9 @@ compliance.py:98-164, refund_analyzer.py:71-92, calculator.py:96-113); here it
 ships as versioned JSON seeds (see scripts/extract_seed_dims.py) loaded into
 typed DataFrames.  All dims are KB-sized (≤ ~100 rows), so every join against
 them is an explicit broadcast hash join — no shuffle, regardless of fact-table
-scale.
+scale.  Each dim is an Arrow-backed ``LocalRelation`` (``sources.local``):
+the JVM holds the rows, so scanning or broadcasting one never runs a Python
+worker and there is nothing to cache.
 
 ``Dims`` also exposes the raw Python rows; driver-side helpers (oracle SQL
 generation, report rendering) reuse them without touching Spark.
@@ -23,6 +25,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StructType
 
 from . import schemas
+from .sources.local import local_frame
 
 SEED_DIR = Path(__file__).resolve().parent / "seeds"
 
@@ -48,7 +51,7 @@ def seed_rows(name: str) -> tuple[dict, ...]:
 
 def _df(spark: SparkSession, name: str, schema: StructType) -> DataFrame:
     rows = [tuple(r[f.name] for f in schema.fields) for r in seed_rows(name)]
-    return spark.createDataFrame(rows, schema).cache()
+    return local_frame(spark, rows, schema)
 
 
 @dataclass(frozen=True)
@@ -64,10 +67,9 @@ class Dims:
     sol_years: DataFrame
 
 
-# One Dims per SparkSession: dim DataFrames are .cache()'d so repeated
-# actions broadcast from the storage layer instead of re-evaluating the
-# Python-RDD-backed createDataFrame (each such evaluation costs a Python
-# worker round-trip PER ACTION — measured ~0.3-0.4 s per dim per query).
+# One Dims per SparkSession: the frames are cheap LocalRelations, but one
+# shared instance lets per-Dims memos (tax._dim_join_frames) build their
+# projections once per session instead of once per query.
 _DIMS_CACHE: dict[int, Dims] = {}
 
 

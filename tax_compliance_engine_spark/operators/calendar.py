@@ -22,6 +22,7 @@ from pyspark.sql import functions as F
 
 from ..dims import Dims
 from ..schemas import DEFAULT_DUE_DAY
+from ..sources.local import local_frame
 
 # Liability → frequency bucketing (compliance.py:186-200, F14).
 FREQ_MONTHLY_MIN = 4800
@@ -53,8 +54,8 @@ def filing_deadlines(
     auto-determined from liability when not supplied (F14).
     """
     if isinstance(states, list):
-        base = spark.createDataFrame(
-            [(s.upper(),) for s in states], "state_code string"
+        base = local_frame(
+            spark, [(s.upper(),) for s in states], "state_code string"
         ).withColumn(
             "estimated_annual_liability",
             F.lit(str(estimated_annual_liability)).cast("decimal(18,2)"),

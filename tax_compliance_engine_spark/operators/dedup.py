@@ -392,11 +392,12 @@ def _all_sigs_at(side: str, j: int) -> Column:
     return F.element_at(F.col(f"{side}.all_sigs"), j + 1)
 
 
-@functools.lru_cache(maxsize=1)
-def _banded_join_cond() -> Column:
+@functools.lru_cache(maxsize=4)
+def _banded_join_cond(n_bands: int) -> Column:
     """Memoized bucket-local self-join condition (band equality +
     doc order + first-shared-band in-join dedup) — shared by the est
-    tail, the bucket-local exact verify, and the fused eval."""
+    tail, the bucket-local exact verify, and the fused eval.  The band
+    count is the cache key, so a geometry change builds a new tree."""
     from functools import reduce
 
     return reduce(
@@ -405,16 +406,15 @@ def _banded_join_cond() -> Column:
             F.col("a.band") == F.col("b.band"),
             F.col("a.band_sig") == F.col("b.band_sig"),
             F.col("a.doc_id") < F.col("b.doc_id"),
-            *first_shared_band_terms(_all_sigs_at, hashing.MINHASH_BANDS),
+            *first_shared_band_terms(_all_sigs_at, n_bands),
         ],
     )
 
 
-@functools.lru_cache(maxsize=1)
-def _est_jaccard_col() -> Column:
-    """Memoized signature-estimated Jaccard (matches/16) over the a./b.
-    component columns."""
-    n_perms = len(hashing.MINHASH_PERMS)
+@functools.lru_cache(maxsize=4)
+def _est_jaccard_col(n_perms: int) -> Column:
+    """Memoized signature-estimated Jaccard (matches/n_perms) over the
+    a./b. ``_mh*`` component columns, keyed on the permutation count."""
     n_match = sum(
         F.when(F.col(f"a._mh{i}") == F.col(f"b._mh{i}"), 1).otherwise(0)
         for i in range(n_perms)
@@ -424,7 +424,9 @@ def _est_jaccard_col() -> Column:
 
 @functools.lru_cache(maxsize=1)
 def _exact_jaccard_col() -> Column:
-    """Memoized exact token-set Jaccard over the a./b. tok_set columns."""
+    """Memoized exact token-set Jaccard over the a./b. tok_set columns —
+    a function of column names only, independent of the MinHash
+    geometry, so it takes no cache key."""
     n_shared = F.size(
         F.array_intersect(F.col("a.tok_set"), F.col("b.tok_set"))
     )
@@ -548,11 +550,11 @@ def _est_pairs_from_per_doc(per_doc: DataFrame, threshold: float) -> DataFrame:
     a = banded.alias("a")
     b = banded.alias("b")
     return (
-        a.join(b, _banded_join_cond())
+        a.join(b, _banded_join_cond(hashing.MINHASH_BANDS))
         .select(
             F.col("a.doc_id").alias("doc1"),
             F.col("b.doc_id").alias("doc2"),
-            _est_jaccard_col().alias("est_jaccard"),
+            _est_jaccard_col(n_perms).alias("est_jaccard"),
         )
         .filter(F.col("est_jaccard") >= threshold)
         .select("doc1", "doc2", "est_jaccard")
@@ -754,7 +756,7 @@ def _verify_bucket_local(per_doc: DataFrame, threshold: float) -> DataFrame:
     a = banded.alias("a")
     b = banded.alias("b")
     return (
-        a.join(b, _banded_join_cond())
+        a.join(b, _banded_join_cond(hashing.MINHASH_BANDS))
         .select(
             F.col("a.doc_id").alias("doc1"),
             F.col("b.doc_id").alias("doc2"),
@@ -1139,11 +1141,11 @@ def est_pair_quality(
     a = banded.alias("a")
     b = banded.alias("b")
     scored = (
-        a.join(b, _banded_join_cond())
+        a.join(b, _banded_join_cond(hashing.MINHASH_BANDS))
         .select(
             F.col("a.doc_id").alias("doc1"),
             F.col("b.doc_id").alias("doc2"),
-            _est_jaccard_col().alias("est_jaccard"),
+            _est_jaccard_col(n_perms).alias("est_jaccard"),
             _exact_jaccard_col().alias("jaccard"),
         )
     )

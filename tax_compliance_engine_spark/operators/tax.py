@@ -74,24 +74,16 @@ def _norm_cols() -> dict[str, Column]:
     }
 
 
-# Memoized per-Dims projected+broadcast-hinted dim frames: the four
-# select projections cost ~0.2 s of py4j round-trips per plan build and
-# the Dims frames are session-cached, so project them once per Dims
-# instance.  Keyed by id(state_rates); the VALUE pins the key's
-# referent (first tuple slot), so the id can never be recycled onto a
-# different DataFrame — a rebuilt Dims (new session, or a bench
-# isolation reload) always gets fresh entries, and stale ones just
-# linger as tiny plan objects.
-_DIM_JOIN_FRAMES: dict[int, tuple] = {}
-
-
+@functools.lru_cache(maxsize=8)
 def _dim_join_frames(
     dims: Dims,
 ) -> tuple[DataFrame, DataFrame, DataFrame, DataFrame]:
-    key = id(dims.state_rates)
-    cached = _DIM_JOIN_FRAMES.get(key)
-    if cached is not None:
-        return cached[1:]
+    """Memoized projected+broadcast-hinted dim frames: the four select
+    projections cost ~0.2 s of py4j round-trips per plan build, so
+    project them once per ``Dims``.  The key is the ``Dims`` value itself
+    (a frozen dataclass hashed and compared on the identities of all its
+    member frames), so any variant — a new session, or a
+    ``dataclasses.replace`` of one member — gets its own projections."""
     sr = F.broadcast(
         dims.state_rates.select(
             F.col("state_code").alias("_sr_state"),
@@ -121,7 +113,6 @@ def _dim_join_frames(
             F.col("rate").alias("city_local_rate"),
         )
     )
-    _DIM_JOIN_FRAMES[key] = (dims.state_rates, sr, ca, ex, lr)
     return sr, ca, ex, lr
 
 

@@ -24,6 +24,7 @@ from pyspark.sql import functions as F
 
 from ..dims import seed_rows
 from ..schemas import MONEY
+from ..sources.local import local_frame
 
 # Fixed analysis date for refund/calendar queries (orders span 1995-2001;
 # 3-4yr SOLs split the range).
@@ -76,9 +77,9 @@ def city_map() -> list[tuple[str, int, str]]:
 PAID_MULTIPLIERS = ["0", "0.05", "0.08", "0.0825", "0.12"]  # o_orderkey % 5
 
 
-# Memoized per-session mapping dims, .cache()'d: re-evaluating a
-# Python-RDD-backed createDataFrame costs a Python worker round-trip on
-# EVERY action that broadcasts it (~0.3-0.4 s each).
+# Memoized per-session mapping dims (LocalRelations, so nothing to
+# cache): one build per session instead of three Arrow hand-offs per
+# tax-family plan construction.
 _MAP_DIMS: dict[int, tuple[DataFrame, DataFrame, DataFrame]] = {}
 
 
@@ -86,16 +87,17 @@ def _mapping_dims(spark: SparkSession) -> tuple[DataFrame, DataFrame, DataFrame]
     cached = _MAP_DIMS.get(id(spark))
     if cached is not None:
         return cached
-    states = spark.createDataFrame(
-        list(enumerate(state_list())), "sidx long, state string"
-    ).cache()
-    cats = spark.createDataFrame(
+    states = local_frame(
+        spark, list(enumerate(state_list())), "sidx long, state string"
+    )
+    cats = local_frame(
+        spark,
         [(i, c) for i, c in enumerate(category_list()) if c is not None],
         "cidx long, item_category string",
-    ).cache()
-    cities = spark.createDataFrame(
-        city_map(), "cm_state string, cm_idx long, city string"
-    ).cache()
+    )
+    cities = local_frame(
+        spark, city_map(), "cm_state string, cm_idx long, city string"
+    )
     _MAP_DIMS[id(spark)] = (states, cats, cities)
     return states, cats, cities
 

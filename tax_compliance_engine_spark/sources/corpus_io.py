@@ -26,6 +26,8 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from .local import local_frame
+
 DOCUMENTS_SCHEMA = StructType(
     [
         StructField("doc_id", LongType(), True),
@@ -66,7 +68,7 @@ def read_documents(
     truncation must also be rejected."""
     if fmt in ("parquet", "orc"):
         df = spark.read.format(fmt).schema(DOCUMENTS_SCHEMA).load(path)
-        empty_rejects = spark.createDataFrame([], "raw_record string")
+        empty_rejects = local_frame(spark, [], "raw_record string")
         return DocumentScan(docs=df, rejects=empty_rejects)
     if fmt not in ("jsonl", "csv"):
         raise ValueError(f"unsupported format: {fmt}")

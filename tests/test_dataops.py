@@ -1192,6 +1192,23 @@ def test_est_pair_quality_shares_one_signature_frame(spark):
     )
 
 
+def test_banded_memos_are_keyed_on_geometry(spark):
+    """The memoized banded join condition and estimated-Jaccard trees
+    take the MinHash geometry as their cache key: the same geometry hits
+    the memo, a changed band or permutation count builds a new tree."""
+    n_bands, n_perms = hashing.MINHASH_BANDS, len(hashing.MINHASH_PERMS)
+    cond = dedup._banded_join_cond(n_bands)
+    assert dedup._banded_join_cond(n_bands) is cond
+    wider = dedup._banded_join_cond(n_bands + 1)
+    assert wider is not cond and str(wider) != str(cond)
+    est = dedup._est_jaccard_col(n_perms)
+    assert dedup._est_jaccard_col(n_perms) is est
+    half = dedup._est_jaccard_col(n_perms // 2)
+    assert half is not est
+    assert f"_mh{n_perms - 1}" in str(est)
+    assert f"_mh{n_perms - 1}" not in str(half)
+
+
 def test_est_quality_planner_gate_and_sampled_twin(spark):
     """est_pair_quality's DEFAULT is scale-safe: the pure planner rule
     keeps the full two-lineage form only up to 20k docs and sizes an

@@ -253,3 +253,33 @@ def test_dim_integrity(dims):
     assert rates["CA"].base_rate == Decimal("0.0725")
     assert rates["OR"].base_rate == Decimal("0")
     assert rates["AK"].base_rate == Decimal("0") and rates["AK"].has_local_taxes
+
+
+def test_dim_join_frames_keyed_on_every_dim(spark, dims):
+    """A Dims variant sharing state_rates but not local_rates gets its
+    own join projections, so its local rates are the ones applied."""
+    from dataclasses import replace
+
+    from tax_compliance_engine_spark.dims import seed_rows
+    from tax_compliance_engine_spark.schemas import LOCAL_RATES_SCHEMA
+    from tax_compliance_engine_spark.sources.local import local_frame
+
+    rows = [
+        tuple(
+            Decimal("0.01")
+            if f == "rate" and r["jurisdiction"] == "Houston"
+            else r[f]
+            for f in LOCAL_RATES_SCHEMA.names
+        )
+        for r in seed_rows("local_rates")
+    ]
+    variant = replace(
+        dims, local_rates=local_frame(spark, rows, LOCAL_RATES_SCHEMA)
+    )
+    assert variant.state_rates is dims.state_rates
+    assert tax._dim_join_frames(variant) is not tax._dim_join_frames(dims)
+    assert tax._dim_join_frames(dims) is tax._dim_join_frames(dims)
+    base = run_one(spark, dims, amount=Decimal("500.00"), city="Houston")
+    varied = run_one(spark, variant, amount=Decimal("500.00"), city="Houston")
+    assert base.local_tax == Decimal("10.00")
+    assert varied.local_tax == Decimal("5.00")
